@@ -1,12 +1,16 @@
 """Simulate the driver's correctness gate locally: run every queries()
 entry at sf0.01 next to its oracle_sql() in DuckDB and compare
-row-count, schema width and order-insensitive values.
+row-count, schema width and order-insensitive values.  Each passing
+query also prints a digest of its normalized rows (sorted, so the digest
+is insensitive to row order): equal digests across two commits mean the
+query returned the same rows on both.
 
 Usage: python scripts/check_oracles.py [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -36,6 +40,11 @@ def norm(v):
     if isinstance(v, str):
         return f"s{v}"
     return f"o{v}"  # datetimes etc: identical objects -> identical text
+
+
+def digest(rows) -> str:
+    """Order-insensitive digest of normalized rows (``rows`` is sorted)."""
+    return hashlib.sha256(repr(rows).encode()).hexdigest()[:16]
 
 
 def main():
@@ -92,7 +101,7 @@ def main():
                         break
                 ok = False
         if ok:
-            print(f"{name:28s} OK rows={len(srows)}")
+            print(f"{name:28s} OK rows={len(srows)} digest={digest(sset)}")
         else:
             failures.append(name)
     print()

@@ -31,7 +31,7 @@ def test_hex_assignment_is_nearest_center(spark):
     centers (ties allowed at exact boundaries)."""
     ix = HexIndex(SIZE)
     rows = (_pts(spark)
-            .withColumn("cell", ix.cell(F.col("lon"), F.col("lat")))
+            .withColumn("cell", ix.cell("lon", "lat"))
             .withColumn("nbrs", ix.neighbors(F.col("cell")))
             .collect())
     assert rows
@@ -49,7 +49,7 @@ def test_hex_assignment_is_nearest_center(spark):
 def test_hex_neighbors_mutual_and_distinct(spark):
     ix = HexIndex(SIZE)
     df = (_pts(spark, 200)
-          .withColumn("cell", ix.cell(F.col("lon"), F.col("lat")))
+          .withColumn("cell", ix.cell("lon", "lat"))
           .select("cell").distinct()
           .withColumn("nbrs", ix.neighbors(F.col("cell"))))
     rows = df.collect()
@@ -70,7 +70,7 @@ def test_hex_parent_children_invert(spark):
     containment is approximate."""
     ix = HexIndex(SIZE, aperture=3)
     df = (_pts(spark, 400)
-          .withColumn("cell", ix.cell(F.col("lon"), F.col("lat")))
+          .withColumn("cell", ix.cell("lon", "lat"))
           .select("cell").distinct()
           .withColumn("parent", ix.parent(F.col("cell")))
           .withColumn("kids", ix.children(F.col("parent"))))
@@ -148,3 +148,13 @@ def test_quadkey_index_contract(spark):
         interior = 0 < y < (1 << z) - 1
         assert len(row.nbrs) == (8 if interior else 5)
         assert len(set(row.nbrs)) == len(row.nbrs)
+    # caller column names are quoted into the generated SQL: hyphenated
+    # and spaced lon/lat names encode to the same cells
+    odd = (pts.withColumnRenamed("lon", "lon-deg")
+           .withColumnRenamed("lat", "lat deg"))
+    odd_enc = encode_points(odd, z, lon="lon-deg", lat="lat deg",
+                            with_quadkey=False).select("url", "x", "y")
+    odd_cells = ix.encode(odd, lon="lon-deg", lat="lat deg").select("url", "cell")
+    assert {r.url: (r.x, r.y) for r in odd_enc.collect()} == enc
+    assert ({r.url: r.cell for r in odd_cells.collect()}
+            == {u: x * (1 << z) + y for u, (x, y) in enc.items()})

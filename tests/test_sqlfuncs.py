@@ -1,33 +1,74 @@
 """Pure-SQL surface (functions/sqlfuncs.py): the vt_* SQL scalar
-functions must agree exactly with the Column builders / tilemath, so an
-all-SQL pipeline is a drop-in for the DataFrame API."""
+functions, the DataFrame encode and DuckDB running the same sqltext
+generators must agree exactly with tilemath, so an all-SQL pipeline is a
+drop-in for the DataFrame API."""
 
+import duckdb
+import numpy as np
 from pyspark.sql import functions as F
 
-from vt_grid_spark import functions as vf
 from vt_grid_spark import tilemath as tm
+from vt_grid_spark.functions import sqltext as sq
 from vt_grid_spark.functions.sqlfuncs import register_sql_functions
 from vt_grid_spark.sources import pages
 
 
-def test_sql_functions_match_column_builders(spark):
+def test_sql_functions_match_tilemath(spark):
+    """Pole rows included: lat = +-90 lands in the edge rows (y = 0 and
+    y = 2^z - 1) in every engine instead of raising or flipping sides."""
+    from vt_grid_spark.operators.encode import encode_points
+
     register_sql_functions(spark)
-    pts = pages.with_coords(pages.pages_df(spark, 500))
+    lonlat = [(lon, lat) for lon in (-180.0, 0.0, 179.999)
+              for lat in (90.0, -90.0, 89.9, -89.9,
+                          85.0511287798, -85.0511287798)]
+    edge = spark.createDataFrame(
+        [(f"edge{i}", lon, lat) for i, (lon, lat) in enumerate(lonlat)],
+        "url string, lon double, lat double")
+    pts = (pages.with_coords(pages.pages_df(spark, 500))
+           .select("url", "lon", "lat").unionByName(edge))
     pts.createOrReplaceTempView("_sqlf_pts")
+    pdf = pts.toPandas()
+    con = duckdb.connect()
+    con.register("pts", pdf)
     for z in (3, 7, 12):
-        got = spark.sql(f"""
-            SELECT url, vt_tile_x(lon, {z}) AS sx, vt_tile_y(lat, {z}) AS sy,
-                   vt_quadkey(vt_tile_x(lon, {z}), vt_tile_y(lat, {z}), {z}) AS sqk
-            FROM _sqlf_pts""")
-        want = pts.select(
-            "url", vf.tile_x(F.col("lon"), z).alias("x"),
-            vf.tile_y(F.col("lat"), z).alias("y")).withColumn(
-            "qk", vf.quadkey(F.col("x"), F.col("y"), z))
-        j = got.join(want, "url")
-        assert j.where((F.col("sx") != F.col("x"))
-                       | (F.col("sy") != F.col("y"))
-                       | (F.col("sqk") != F.col("qk"))).count() == 0
-        assert j.count() == pts.count()
+        with np.errstate(divide="ignore"):  # ln(0) / 1/0 at the poles
+            x, y = tm.point_to_tile(pdf.lon.to_numpy(), pdf.lat.to_numpy(), z)
+        want = {u: (int(a), int(b), tm.tile_to_quadkey(int(a), int(b), z))
+                for u, a, b in zip(pdf.url, x, y)}
+        assert want["edge0"][1] == 0 and want["edge1"][1] == (1 << z) - 1
+        sql = spark.sql(f"""
+            SELECT url, x, y, vt_quadkey(x, y, {z}),
+                   vt_tile_lon(x, {z}) AS w, vt_tile_lat(y, {z}) AS n FROM (
+              SELECT url, vt_tile_x(lon, {z}) AS x, vt_tile_y(lat, {z}) AS y
+              FROM _sqlf_pts)""").collect()
+        for r in sql:  # NW corner of each cell, against the numpy twin
+            assert abs(r.w - float(tm.tile_to_lon(r.x, z))) < 1e-9
+            assert abs(r.n - float(tm.tile_to_lat(r.y, z))) < 1e-9
+        sql = [r[:4] for r in sql]
+        enc = encode_points(pts, z).select("url", "x", "y", "quadkey").collect()
+        duck = con.execute(f"""
+            SELECT url, x, y, {sq.quadkey_sql('x', 'y', z)} FROM (
+              SELECT url, {sq.tile_x_sql('lon', z)} AS x,
+                     {sq.tile_y_sql('lat', z)} AS y FROM pts)""").fetchall()
+        for got in (sql, enc, duck):
+            assert {r[0]: tuple(r[1:]) for r in got} == want, z
+
+
+def test_quote_str_reads_back_in_both_engines(spark):
+    """sqltext.quote_str literals survive DuckDB and Spark under either
+    spark.sql.parser.escapedStringLiterals setting."""
+    words = ["plain", "l'", "it''s", "back\\slash", "\\'", "", "'"]
+    arr = ", ".join(sq.quote_str(w) for w in words)
+    assert duckdb.sql(f"SELECT [{arr}]").fetchone()[0] == words
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key)
+    try:
+        for value in ("false", "true"):
+            spark.conf.set(key, value)
+            assert spark.sql(f"SELECT array({arr}) AS a").first().a == words
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_sql_quadkey_roundtrip_and_lineage(spark):

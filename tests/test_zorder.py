@@ -1,4 +1,4 @@
-"""Z-order clustered level layout (functions.morton +
+"""Z-order clustered level layout (sqltext.morton_sql +
 TableIO.write_level(cluster=True)): correctness of the Morton code and a
 QUANTITATIVE footprint check — clustered files must carry narrow x AND y
 column stats, which is what lets a bbox scan prune row groups."""
@@ -6,7 +6,7 @@ column stats, which is what lets a bbox scan prune row groups."""
 import numpy as np
 from pyspark.sql import functions as F
 
-from vt_grid_spark import functions as vf
+from vt_grid_spark.functions import sqltext as sq
 from vt_grid_spark.sources import pages
 from vt_grid_spark.sources.table_io import TableIO
 
@@ -25,7 +25,7 @@ def test_morton_matches_numpy_twin(spark):
         (F.xxhash64("id") % n).alias("x"),
         (F.xxhash64(F.col("id") + 1) % n).alias("y"))
     df = df.select(F.abs("x").alias("x"), F.abs("y").alias("y"))
-    rows = df.withColumn("m", vf.morton(F.col("x"), F.col("y"))).collect()
+    rows = df.withColumn("m", F.expr(sq.morton_sql("x", "y"))).collect()
     x = np.array([r.x for r in rows])
     y = np.array([r.y for r in rows])
     m = np.array([r.m for r in rows])
@@ -33,7 +33,7 @@ def test_morton_matches_numpy_twin(spark):
     # order-isomorphism sanity at a high zoom: x,y < 2^28 stays exact
     big = spark.createDataFrame(
         [( (1 << 28) - 1, (1 << 28) - 3 )], "x long, y long")
-    got = big.select(vf.morton(F.col("x"), F.col("y")).alias("m")).collect()[0].m
+    got = big.select(F.expr(sq.morton_sql("x", "y")).alias("m")).collect()[0].m
     assert got == int(_morton_np(np.array([(1 << 28) - 1]),
                                  np.array([(1 << 28) - 3]))[0])
 

@@ -4,7 +4,7 @@ engine with the query semantics of developmentseed/vt-grid (reference at
 
 Layout:
   tilemath    — pure-numpy tile/quadkey math (determinism anchor)
-  functions   — Catalyst Column builders + DuckDB SQL-text twins
+  functions   — tile math as SQL text, shared by Spark and DuckDB
   sources     — synthetic page corpus, relational loaders, table IO
   operators   — encode, rollup, pyramid driver, clip, spatial join, kNN,
                 raster<->vector, dedup, similarity, text analysis

@@ -14,8 +14,9 @@ interface, with two engines:
     no UDF, whole-stage-codegen friendly, and mirrored term-for-term in
     DuckDB SQL for the oracle (``hex_q_sql`` / ``hex_r_sql``).
 
-Every method returns Spark Column expressions over a packed 64-bit cell
-id, so indexes compose with joins/groupBys exactly like the quadkey
+``cell`` takes the lon/lat column names (like ``encode_points``); every
+other method maps a Column to a Column over a packed 64-bit cell id, so
+indexes compose with joins/groupBys exactly like the quadkey
 (x, y) keys do — integer shuffle keys, never strings.
 
 Rounding note: cube rounding needs round-half-up on doubles; both sides
@@ -32,7 +33,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vt_grid_spark import functions as vf
+from vt_grid_spark.functions import sqltext as sq
 
 _OFF = 1 << 30  # axial coords are offset-shifted to stay non-negative
 
@@ -42,9 +43,10 @@ _OFF = 1 << 30  # axial coords are offset-shifted to stay non-negative
 # ---------------------------------------------------------------------------
 
 class CellIndex:
-    """point->cell id, parent, children, neighbors (all Column->Column)."""
+    """point->cell id (from lon/lat column names); parent, children,
+    neighbors (Column->Column)."""
 
-    def cell(self, lon: Column, lat: Column) -> Column:
+    def cell(self, lon: str, lat: str) -> Column:
         raise NotImplementedError
 
     def parent(self, cell: Column) -> Column:
@@ -58,7 +60,7 @@ class CellIndex:
 
     def encode(self, df: DataFrame, lon: str = "lon", lat: str = "lat",
                out: str = "cell") -> DataFrame:
-        return df.withColumn(out, self.cell(F.col(lon), F.col(lat)))
+        return df.withColumn(out, self.cell(lon, lat))
 
 
 # ---------------------------------------------------------------------------
@@ -76,8 +78,10 @@ class QuadkeyIndex(CellIndex):
     def _pack(self, x: Column, y: Column, z: int) -> Column:
         return (x.cast("long") * F.lit(1 << z) + y.cast("long")).cast("long")
 
-    def cell(self, lon: Column, lat: Column) -> Column:
-        return self._pack(vf.tile_x(lon, self.z), vf.tile_y(lat, self.z), self.z)
+    def cell(self, lon: str, lat: str) -> Column:
+        return self._pack(F.expr(sq.tile_x_sql(sq.quote_ident(lon), self.z)),
+                          F.expr(sq.tile_y_sql(sq.quote_ident(lat), self.z)),
+                          self.z)
 
     def xy(self, cell: Column) -> tuple[Column, Column]:
         # exact integer bit math: cell = x*2^z + y packs losslessly for
@@ -181,8 +185,8 @@ class HexIndex(CellIndex):
         q, r = _cube_round(*self._frac(lon, lat, size))
         return self._pack(q, r)
 
-    def cell(self, lon: Column, lat: Column) -> Column:
-        return self._cell_at(lon, lat, self.size)
+    def cell(self, lon: str, lat: str) -> Column:
+        return self._cell_at(F.col(lon), F.col(lat), self.size)
 
     def parent(self, cell: Column) -> Column:
         q, r = self.qr(cell)

@@ -1,172 +1,7 @@
-"""JVM-side column expressions for tile math.
+"""Tile math for the JVM side.
 
-Same closed-form Web-Mercator formulas as :mod:`vt_grid_spark.tilemath`,
-expressed as Catalyst column trees so the hot path (point -> cell encode,
-pyramid rollup keys) never leaves whole-stage codegen.  The matching ANSI-SQL
-text generators (for the DuckDB oracles) live in
-:mod:`vt_grid_spark.functions.sqltext` — keep the two in lockstep.
+:mod:`.sqltext` spells every Web-Mercator formula once, as SQL text that
+Spark (through ``F.expr``) and the DuckDB oracles both evaluate;
+:mod:`.sqlfuncs` registers the same bodies as ``vt_*`` Spark SQL
+functions.  :mod:`vt_grid_spark.tilemath` is the numpy twin.
 """
-
-from __future__ import annotations
-
-import math
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def tile_x(lon: Column, z: int) -> Column:
-    """Integer tile x for a longitude column at literal zoom z.
-
-    x = floor(2^z * (lon/360 + 0.5)) mod 2^z, clamped — parity with
-    tilebelt.pointToTile as used by the reference's grid assignment
-    (/root/reference/lib/aggregate-cells.js:54-78 does this via geojson-vt).
-    """
-    z2 = float(1 << z)
-    fx = F.lit(z2) * (lon / F.lit(360.0) + F.lit(0.5))
-    fx = fx % F.lit(z2)
-    fx = F.when(fx < 0, fx + F.lit(z2)).otherwise(fx)
-    return F.least(F.greatest(F.floor(fx), F.lit(0)), F.lit((1 << z) - 1)).cast("long")
-
-
-def tile_y(lat: Column, z: int) -> Column:
-    """Integer tile y: floor(2^z * (0.5 - 0.25*ln((1+sin)/(1-sin))/pi)), clamped."""
-    z2 = float(1 << z)
-    s = F.sin(F.radians(lat))
-    fy = F.lit(z2) * (
-        F.lit(0.5)
-        - F.lit(0.25) * F.log((F.lit(1.0) + s) / (F.lit(1.0) - s)) / F.lit(math.pi)
-    )
-    return F.least(F.greatest(F.floor(fy), F.lit(0)), F.lit((1 << z) - 1)).cast("long")
-
-
-def quadkey(x: Column, y: Column, z: int) -> Column:
-    """Quadkey string from integer tile (x, y) at literal zoom z.
-
-    Pure bit arithmetic unrolled per level — stays in codegen, no UDF.
-    digit k = bit(z-k) of x + 2*bit(z-k) of y
-    (tilebelt.tileToQuadkey parity, /root/reference/lib/aggregate-cells.js:32).
-    """
-    if z == 0:
-        return F.lit("")
-    parts = []
-    for k in range(z):
-        shift = z - 1 - k
-        d = (F.shiftright(x, shift).bitwiseAND(F.lit(1))
-             + F.shiftright(y, shift).bitwiseAND(F.lit(1)) * F.lit(2))
-        parts.append(d.cast("string"))
-    return F.concat(*parts)
-
-
-def parent_qk(qk: Column) -> Column:
-    """Parent cell key = quadkey minus last char
-    (/root/reference/lib/aggregate-cells.js:31-32 computes exactly this)."""
-    return qk.substr(F.lit(1), F.length(qk) - 1)
-
-
-def parent_xy(x: Column, y: Column) -> tuple[Column, Column]:
-    """Parent tile in integer space: (x>>1, y>>1) — tilebelt.getParent."""
-    return F.shiftright(x, 1), F.shiftright(y, 1)
-
-
-def ancestor_xy(x: Column, y: Column, dz: int) -> tuple[Column, Column]:
-    """Ancestor dz levels up: (x>>dz, y>>dz) — rollup in integer key space."""
-    return F.shiftright(x, dz), F.shiftright(y, dz)
-
-
-def tile_lon(x: Column, z: int) -> Column:
-    return x.cast("double") / F.lit(float(1 << z)) * F.lit(360.0) - F.lit(180.0)
-
-
-def tile_lat(y: Column, z: int) -> Column:
-    n = F.lit(math.pi) - F.lit(2.0 * math.pi) * y.cast("double") / F.lit(float(1 << z))
-    return F.degrees(F.atan(F.lit(0.5) * (F.exp(n) - F.exp(-n))))
-
-
-def tile_lon_dyn(x: Column, zoom: Column) -> Column:
-    """tile_lon with a per-row zoom column (sqltext.tile_lon_dyn_sql twin)."""
-    return (x.cast("double") / F.pow(F.lit(2.0), zoom.cast("double"))
-            * F.lit(360.0) - F.lit(180.0))
-
-
-def tile_lat_dyn(y: Column, zoom: Column) -> Column:
-    n = (F.lit(math.pi) - F.lit(2.0 * math.pi) * y.cast("double")
-         / F.pow(F.lit(2.0), zoom.cast("double")))
-    return F.degrees(F.atan(F.lit(0.5) * (F.exp(n) - F.exp(-n))))
-
-
-def degenerate_pass_point(lon: Column, lat: Column, x: Column, y: Column,
-                          z: int) -> Column:
-    """Strict-interior degenerate test for a POINT feature against its
-    cell at zoom z, as a pure column expression — the single-vertex case
-    of /root/reference/lib/degenerate.js:10-47 (Point rule line 28): the
-    point must lie strictly MORE than eps inside all four cell edges,
-    eps = 0.087 / 4^z (degenerate.js:12-14)."""
-    eps = F.lit(0.087 / (4.0 ** z))
-    w = tile_lon(x, z)
-    e = tile_lon(x + F.lit(1), z)
-    s = tile_lat(y + F.lit(1), z)
-    n = tile_lat(y, z)
-    return (lon - w > eps) & (e - lon > eps) & (lat - s > eps) & (n - lat > eps)
-
-
-def tile_bbox(x: Column, y: Column, z: int) -> Column:
-    """struct(west, south, east, north) of the cell — derived on demand,
-    never stored (the grouping key is the quadkey / (x,y) ints)."""
-    return F.struct(
-        tile_lon(x, z).alias("west"),
-        tile_lat(y + F.lit(1), z).alias("south"),
-        tile_lon(x + F.lit(1), z).alias("east"),
-        tile_lat(y, z).alias("north"),
-    )
-
-
-def cell_centroid(x: Column, y: Column, z: int) -> tuple[Column, Column]:
-    """(lon, lat) of the cell center."""
-    lon = tile_lon(x.cast("double") + F.lit(0.5), z)
-    lat = tile_lat(y.cast("double") + F.lit(0.5), z)
-    return lon, lat
-
-
-def tile_lon_frac(xf: Column, z: int) -> Column:
-    return xf / F.lit(float(1 << z)) * F.lit(360.0) - F.lit(180.0)
-
-
-def tile_lat_frac(yf: Column, z: int) -> Column:
-    n = F.lit(math.pi) - F.lit(2.0 * math.pi) * yf / F.lit(float(1 << z))
-    return F.degrees(F.atan(F.lit(0.5) * (F.exp(n) - F.exp(-n))))
-
-
-def cell_area_weight(y: Column, z: int) -> Column:
-    """Relative spherical area of a cell (row y at zoom z), for
-    areaWeightedMean across grid levels: cells in a Mercator row share area
-    A ∝ sin(lat_n) - sin(lat_s).  Matches the reference's semantics where
-    the weight of a wholly-contained child is its own area
-    (/root/reference/test/lib/aggregate-cells.js:30-56 relies only on
-    ratios, so the ∝ constant cancels)."""
-    lat_n = F.radians(tile_lat(y, z))
-    lat_s = F.radians(tile_lat(y + F.lit(1), z))
-    return F.sin(lat_n) - F.sin(lat_s)
-
-
-def _spread_bits(v: Column) -> Column:
-    """Interleave zeros between the low 32 bits of v (the classic
-    magic-mask spread, e.g. Morton-code references in HAKMEM / "Bit
-    Twiddling Hacks"): bit i of v lands at bit 2i.  Five shift-or-mask
-    steps, pure codegen."""
-    v = v.bitwiseOR(F.shiftleft(v, 16)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-    v = v.bitwiseOR(F.shiftleft(v, 8)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-    v = v.bitwiseOR(F.shiftleft(v, 4)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-    v = v.bitwiseOR(F.shiftleft(v, 2)).bitwiseAND(F.lit(0x3333333333333333))
-    v = v.bitwiseOR(F.shiftleft(v, 1)).bitwiseAND(F.lit(0x5555555555555555))
-    return v
-
-
-def morton(x: Column, y: Column) -> Column:
-    """Z-order (Morton) code of a cell: x bits on even positions, y bits
-    on odd — one bigint that linearizes the 2-D grid so RANGE-partitioned,
-    sorted level files carry narrow min/max stats on BOTH x and y (the
-    storage-clustering key behind ``TableIO.write_level(cluster=True)``).
-    Exact for x, y < 2^31 (zooms <= 31 — every zoom the engine uses)."""
-    return _spread_bits(x.cast("long")).bitwiseOR(
-        F.shiftleft(_spread_bits(y.cast("long")), 1))

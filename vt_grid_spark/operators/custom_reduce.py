@@ -111,7 +111,7 @@ def build_custom_pyramid(points: DataFrame, io, reduce_fn,
 
     Returns {cell_zoom: manifest} like :func:`operators.pyramid.build_pyramid`.
     """
-    from vt_grid_spark import functions as vf
+    from vt_grid_spark.functions import sqltext as sq
     from vt_grid_spark.operators.encode import encode_points
     from vt_grid_spark.tilemath import grid_zoom
 
@@ -125,7 +125,7 @@ def build_custom_pyramid(points: DataFrame, io, reduce_fn,
         cells = apply_custom_reducer(encoded, cell_z, output_z, reduce_fn,
                                      result_schema, strategy=strategy)
         out = (cells.withColumn("zoom", F.lit(cell_z))
-               .withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), cell_z)))
+               .withColumn("quadkey", F.expr(sq.quadkey_sql("x", "y", cell_z))))
         val_cols = [c for c in cells.columns if c not in ("x", "y")]
         out = out.select("zoom", "x", "y", "quadkey", *val_cols)
         manifests[cell_z] = io.write_level(

@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from vt_grid_spark import functions as vf
 from vt_grid_spark import tilemath as tm
+from vt_grid_spark.functions import sqltext as sq
 
 
 def encode_points(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
@@ -26,11 +26,11 @@ def encode_points(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
     """
     out = (
         df.withColumn("zoom", F.lit(z))
-        .withColumn("x", vf.tile_x(F.col(lon), z))
-        .withColumn("y", vf.tile_y(F.col(lat), z))
+        .withColumn("x", F.expr(sq.tile_x_sql(sq.quote_ident(lon), z)))
+        .withColumn("y", F.expr(sq.tile_y_sql(sq.quote_ident(lat), z)))
     )
     if with_quadkey:
-        out = out.withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), z))
+        out = out.withColumn("quadkey", F.expr(sq.quadkey_sql("x", "y", z)))
     return out
 
 
@@ -99,7 +99,7 @@ def cell_aggregate(points: DataFrame, z: int, agg_exprs: list,
     out = out.withColumn("zoom", F.lit(z))
     cols = ["zoom", "x", "y"]
     if "quadkey" in points.columns:
-        out = out.withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), z))
+        out = out.withColumn("quadkey", F.expr(sq.quadkey_sql("x", "y", z)))
         cols.append("quadkey")
     agg_cols = [c for c in out.columns if c not in set(cols) | set(extra_keys or [])]
     return out.select(*cols, *(extra_keys or []), *agg_cols)

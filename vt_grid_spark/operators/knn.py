@@ -45,14 +45,6 @@ _INF = float("inf")
 _INF_SQL = "CAST('Infinity' AS DOUBLE)"
 
 
-def _bq(name: str) -> str:
-    """Backtick-quote a column name for generated SQL text, so names that
-    are not plain identifiers (hyphens, spaces, keyword-shaped) keep the
-    literal-resolution contract ``F.col(name)`` had before the SQL-text
-    rewrite."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _d2(qlon, qlat, plon, plat):
     dlat = qlat - plat
     dlon = qlon - plon
@@ -112,12 +104,11 @@ def _ring_boundary_d2_sql(z: int, ring: int) -> str:
         the ring is clamped at the top/bottom tile row (encode clamps
         out-of-range latitudes INTO those rows, so nothing exists beyond).
 
-    Emitted as ONE generated SQL string (the :mod:`sqltext` twins keep the
-    double arithmetic textually identical to the Column builders) instead
-    of ~20 nested Column constructors: each python-side constructor is a
-    py4j round trip, and this expression is rebuilt at every escalation
-    level of every knn_cells call — measured ~0.1 s of pure driver time
-    per level on this box.
+    Emitted as ONE generated SQL string (the :mod:`sqltext` tile math
+    every encode path uses) instead of ~20 nested Column constructors:
+    each python-side constructor is a py4j round trip, and this
+    expression is rebuilt at every escalation level of every knn_cells
+    call — measured ~0.1 s of pure Spark-driver time per level.
     """
     n_tiles = 1 << z
     if 2 * ring + 1 >= n_tiles:
@@ -209,7 +200,7 @@ def knn_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
         enc_p = _enc_p
 
     q = encode_points(queries, z, with_quadkey=False).selectExpr(
-        _bq(query_id), "lon AS _qlon", "lat AS _qlat", "x AS _qx", "y AS _qy",
+        sq.quote_ident(query_id), "lon AS _qlon", "lat AS _qlat", "x AS _qx", "y AS _qy",
     ).withColumn("_bd2", F.expr(_ring_boundary_d2_sql(z, ring)))
 
     # (query, ring-cell) candidate relation — explode over the (2r+1)^2
@@ -236,7 +227,7 @@ def knn_cells(points: DataFrame, queries: DataFrame, k: int, z: int = 7,
     cells = (
         q.selectExpr("*", f"explode({offsets}) AS _o")
         .selectExpr(
-            _bq(query_id), "_qlon", "_qlat", "_bd2",
+            sq.quote_ident(query_id), "_qlon", "_qlat", "_bd2",
             f"pmod(_qx + _o.dx, {n_tiles}) AS x",
             "_qy + _o.dy AS y",
         )

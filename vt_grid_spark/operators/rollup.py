@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vt_grid_spark import functions as vf
+from vt_grid_spark.functions import sqltext as sq
 from vt_grid_spark.plans.aggspec import AggSpec, compile_rollup_aggs
 
 HOLISTIC = {"union", "kmvDistinct"}
@@ -63,8 +63,8 @@ def rollup_level(cells: DataFrame, child_z: int, specs: list[AggSpec],
     exprs = compile_rollup_aggs(specs)
     keys = extra_keys or []
 
-    px, py = vf.parent_xy(F.col("x"), F.col("y"))
-    parented = cells.withColumn("_px", px).withColumn("_py", py)
+    parented = (cells.withColumn("_px", F.shiftright("x", 1))
+                .withColumn("_py", F.shiftright("y", 1)))
 
     if salt_buckets > 1 and _has_holistic(specs):
         # two-phase: partials per (parent, salt), then final per parent.
@@ -82,7 +82,7 @@ def rollup_level(cells: DataFrame, child_z: int, specs: list[AggSpec],
         grouped.withColumnRenamed("_px", "x")
         .withColumnRenamed("_py", "y")
         .withColumn("zoom", F.lit(z))
-        .withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), z))
+        .withColumn("quadkey", F.expr(sq.quadkey_sql("x", "y", z)))
     )
     # stable column order: keys, then aggregates
     agg_cols = [c for c in out.columns if c not in {"zoom", "x", "y", "quadkey", *keys}]
@@ -109,7 +109,7 @@ def merge_cells(parts: list[DataFrame], zoom: int, specs: list[AggSpec],
         base = base.unionByName(p.select(*cols))
     grouped = base.groupBy("x", "y", *keys).agg(*compile_rollup_aggs(specs))
     out = (grouped.withColumn("zoom", F.lit(zoom))
-           .withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), zoom)))
+           .withColumn("quadkey", F.expr(sq.quadkey_sql("x", "y", zoom))))
     agg_cols = [c for c in out.columns
                 if c not in {"zoom", "x", "y", "quadkey", *keys}]
     return out.select("zoom", "x", "y", "quadkey", *keys, *agg_cols)
@@ -139,4 +139,4 @@ def densify(cells: DataFrame, parent_z: int, cell_z: int) -> DataFrame:
     )
     return grid.join(cells, ["x", "y"], "left").withColumn(
         "zoom", F.lit(cell_z)
-    ).withColumn("quadkey", vf.quadkey(F.col("x"), F.col("y"), cell_z))
+    ).withColumn("quadkey", F.expr(sq.quadkey_sql("x", "y", cell_z)))

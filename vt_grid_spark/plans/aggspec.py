@@ -34,6 +34,8 @@ from typing import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from vt_grid_spark.functions import sqltext as sq
+
 VALID_REDUCERS = {
     "count", "sum", "min", "max", "mean",
     "areaWeightedMean", "areaWeightedSum", "totalArea", "union",
@@ -134,13 +136,6 @@ class CompiledAggs:
     post: dict[str, Callable[[], Column]] = field(default_factory=dict)
 
 
-def _bq(name: str) -> str:
-    """Backtick-quote a column name for generated SQL text: keeps the
-    literal-resolution contract ``F.col(name)`` had (a field named like a
-    niladic function or containing a hyphen must stay a column ref)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _w(spec: AggSpec) -> Column:
     return F.col(spec.weight) if spec.weight else F.lit(1.0)
 
@@ -193,7 +188,7 @@ def compile_aggs(specs: list[AggSpec]) -> list[Column]:
             # repr() round-trips the width double, so bucketing is
             # bit-identical (oracle + merge-proof tests green).
             b = (f"cast(least({s.buckets - 1}, greatest(0, "
-                 f"floor({_bq(s.field)} / {s.width!r}D))) as int)")
+                 f"floor({sq.quote_ident(s.field)} / {s.width!r}D))) as int)")
             out.append(F.expr("array(" + ",".join(
                 f"sum(cast(CASE WHEN {b} = {i} THEN 1 ELSE 0 END as long))"
                 for i in range(s.buckets)) + ")").alias(s.out))
@@ -237,7 +232,7 @@ def compile_rollup_aggs(specs: list[AggSpec]) -> list[Column]:
             # merge; generated SQL text for the same py4j-latency reason
             # as the base-level compile (one F.expr vs 4/bucket)
             out.append(F.expr("array(" + ",".join(
-                f"sum(element_at({_bq(s.out)}, {i + 1}))"
+                f"sum(element_at({sq.quote_ident(s.out)}, {i + 1}))"
                 for i in range(s.buckets)) + ")").alias(s.out))
     return out
 

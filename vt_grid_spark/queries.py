@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vt_grid_spark import functions as vf
 from vt_grid_spark.functions import sqltext as sq
 from vt_grid_spark.sources import pages
 
@@ -80,7 +79,7 @@ def cell_encode_z12(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         enc.groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("chars").alias("sum_chars"))
-        .select("x", "y", vf.quadkey(F.col("x"), F.col("y"), 12).alias("quadkey"),
+        .select("x", "y", F.expr(sq.quadkey_sql("x", "y", 12)).alias("quadkey"),
                 "cnt", "sum_chars")
     )
 
@@ -289,7 +288,7 @@ def progeny_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         enc.where(cond)
         .groupBy(ax.alias("_ax"), ay.alias("_ay"))
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(vf.quadkey(F.col("_ax"), F.col("_ay"), 4).alias("anc"), "cnt")
+        .select(F.expr(sq.quadkey_sql("_ax", "_ay", 4)).alias("anc"), "cnt")
     )
 
 

@@ -16,7 +16,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vt_grid_spark import functions as vf
 from vt_grid_spark import tilemath as tm
 from vt_grid_spark.functions import sqltext as sq
 from vt_grid_spark.queries import _ANCESTORS, _PAGES, _pts, register
@@ -45,7 +44,7 @@ _DEG_PASS_SQL = (
     "degenerate_filter_eps_z6",
     f"""
 WITH pts AS (
-  SELECT (CAST(i % 64 AS DOUBLE) / 64.0 * 360.0 - 180.0)
+  SELECT {sq.tile_lon_sql('i % 64', _DEG_Z)}
          + ([{", ".join(repr(o) for o in _DEG_OFFS)}])[CAST(i % 5 AS INT) + 1] AS lon,
          20.000123 AS lat
   FROM (SELECT range AS i FROM range(0, 4096))
@@ -68,19 +67,14 @@ def degenerate_filter_eps_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_clip_degenerate.py)."""
     from vt_grid_spark.operators.encode import encode_points
 
-    i = F.col("id")
-    off = F.element_at(F.array(*[F.lit(o) for o in _DEG_OFFS]),
-                       (i % 5 + 1).cast("int"))
-    pts = spark.range(4096).select(
-        ((i % 64).cast("double") / F.lit(64.0) * F.lit(360.0) - F.lit(180.0)
-         + off).alias("lon"),
-        F.lit(20.000123).alias("lat"),
-    )
+    offs = ", ".join(repr(o) for o in _DEG_OFFS)
+    pts = spark.range(4096).selectExpr(
+        f"{sq.tile_lon_sql('id % 64', _DEG_Z)}"
+        f" + element_at(array({offs}), CAST(id % 5 + 1 AS INT)) AS lon",
+        "CAST(20.000123 AS DOUBLE) AS lat")
     enc = encode_points(pts, _DEG_Z, with_quadkey=False)
-    flag = vf.degenerate_pass_point(F.col("lon"), F.col("lat"),
-                                    F.col("x"), F.col("y"), _DEG_Z)
     return enc.groupBy("x", "y").agg(
-        F.sum(F.when(flag, 1).otherwise(0)).alias("n_pass"),
+        F.sum(F.when(F.expr(_DEG_PASS_SQL), 1).otherwise(0)).alias("n_pass"),
         F.count(F.lit(1)).alias("n_total"),
     )
 
@@ -297,12 +291,11 @@ def progeny_children_z6(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.shiftleft("ay", 2) + F.col("_dy")).alias("y"),
         )
     )
-    px, py = vf.parent_xy(F.col("x"), F.col("y"))
     return prog.select(
-        vf.quadkey(F.col("ax"), F.col("ay"), 4).alias("anc"),
+        F.expr(sq.quadkey_sql("ax", "ay", 4)).alias("anc"),
         "x", "y",
-        vf.quadkey(F.col("x"), F.col("y"), 6).alias("quadkey"),
-        vf.quadkey(px, py, 5).alias("parent_qk"),
+        F.expr(sq.quadkey_sql("x", "y", 6)).alias("quadkey"),
+        F.expr(sq.quadkey_sql("(x >> 1)", "(y >> 1)", 5)).alias("parent_qk"),
     )
 
 
@@ -391,10 +384,10 @@ u AS (
   SELECT CAST(zoom AS BIGINT) AS zoom, x, y, cnt FROM p
 )
 SELECT zoom, x, y, cnt,
-  ROUND({sq.tile_lon_dyn_sql('x', 'zoom')}, 9) AS west,
-  ROUND({sq.tile_lat_dyn_sql('(y + 1)', 'zoom')}, 9) AS south,
-  ROUND({sq.tile_lon_dyn_sql('(x + 1)', 'zoom')}, 9) AS east,
-  ROUND({sq.tile_lat_dyn_sql('y', 'zoom')}, 9) AS north
+  ROUND({sq.tile_lon_sql('x', 'zoom')}, 9) AS west,
+  ROUND({sq.tile_lat_sql('(y + 1)', 'zoom')}, 9) AS south,
+  ROUND({sq.tile_lon_sql('(x + 1)', 'zoom')}, 9) AS east,
+  ROUND({sq.tile_lat_sql('y', 'zoom')}, 9) AS north
 FROM u
 """,
 )
@@ -418,13 +411,12 @@ def bbox_cover_build_z9(spark: SparkSession, sf_dir: str) -> DataFrame:
                         aggregations=[AggSpec(out="cnt", reducer="count")])],
         gridsize=1, bbox=_COVER_BBOX)
     out = build_pyramid_df(_pts(spark, sf_dir), plan)
-    z = F.col("zoom").cast("long")
-    return out.select(
-        z.alias("zoom"), "x", "y", "cnt",
-        F.round(vf.tile_lon_dyn(F.col("x"), z), 9).alias("west"),
-        F.round(vf.tile_lat_dyn(F.col("y") + F.lit(1), z), 9).alias("south"),
-        F.round(vf.tile_lon_dyn(F.col("x") + F.lit(1), z), 9).alias("east"),
-        F.round(vf.tile_lat_dyn(F.col("y"), z), 9).alias("north"),
+    return out.selectExpr(
+        "CAST(zoom AS BIGINT) AS zoom", "x", "y", "cnt",
+        f"ROUND({sq.tile_lon_sql('x', 'zoom')}, 9) AS west",
+        f"ROUND({sq.tile_lat_sql('(y + 1)', 'zoom')}, 9) AS south",
+        f"ROUND({sq.tile_lon_sql('(x + 1)', 'zoom')}, 9) AS east",
+        f"ROUND({sq.tile_lat_sql('y', 'zoom')}, 9) AS north",
     )
 
 
@@ -1186,7 +1178,7 @@ def hex_bin_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ix = HexIndex(_HEX_SIZE, aperture=_HEX_APERTURE)
     pts = _pts(spark, sf_dir).withColumn("chars", F.length("text").cast("long"))
-    enc = (pts.withColumn("cell", ix.cell(F.col("lon"), F.col("lat")))
+    enc = (pts.withColumn("cell", ix.cell("lon", "lat"))
            .withColumn("pcell", ix.parent(F.col("cell"))))
     q, r = HexIndex.qr(F.col("cell"))
     pq, pr = HexIndex.qr(F.col("pcell"))

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vt_grid_spark.functions import sqltext as sq
 from vt_grid_spark.operators.dedup import (MINHASH_AS, MINHASH_BS, MINHASH_P,
                                            exact_dedup, minhash_bands,
                                            minhash_dup_pairs,
@@ -344,8 +345,7 @@ from vt_grid_spark.operators.textops import GOPHER, STOPWORDS
 
 
 def _sw_sql(lang: str) -> str:
-    return "[" + ", ".join("'" + w.replace("'", "''") + "'"
-                           for w in STOPWORDS[lang]) + "]"
+    return "[" + ", ".join(sq.quote_str(w) for w in STOPWORDS[lang]) + "]"
 
 
 _EN_HITS = (f"len(list_filter(ws, x -> list_contains({_sw_sql('en')}, x)))")
@@ -908,7 +908,7 @@ def html_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_windowed_cells",
-    """
+    f"""
 WITH e AS (
   SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS window_start,
          (-180.0 + CAST((user_id * 37) % 36000 AS DOUBLE) / 100.0) AS lon,
@@ -918,11 +918,8 @@ WITH e AS (
 ),
 enc AS (
   SELECT window_start,
-         CAST(LEAST(GREATEST(FLOOR((CASE WHEN ((64.0 * ((lon)/360.0 + 0.5)) % 64.0) < 0
-           THEN ((64.0 * ((lon)/360.0 + 0.5)) % 64.0) + 64.0
-           ELSE ((64.0 * ((lon)/360.0 + 0.5)) % 64.0) END)), 0), 63) AS BIGINT) AS x,
-         CAST(LEAST(GREATEST(FLOOR((64.0 * (0.5 - 0.25 * LN((1.0 + SIN(RADIANS(lat)))
-           / (1.0 - SIN(RADIANS(lat)))) / PI()))), 0), 63) AS BIGINT) AS y,
+         {sq.tile_x_sql('lon', 6)} AS x,
+         {sq.tile_y_sql('lat', 6)} AS y,
          value
   FROM e
 )

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vt_grid_spark import functions as vf
+from vt_grid_spark.functions import sqltext as sq
 
 
 def geojson_view(cells: DataFrame, z: int, properties: list[str],
@@ -24,10 +24,10 @@ def geojson_view(cells: DataFrame, z: int, properties: list[str],
     properties serialize as JSON strings like the reference's
     ``"FID": "[59, 707, 1002]"`` (README.md:154) by virtue of to_json.
     """
-    w = vf.tile_lon(F.col("x"), z)
-    e = vf.tile_lon(F.col("x") + F.lit(1), z)
-    s = vf.tile_lat(F.col("y") + F.lit(1), z)
-    n = vf.tile_lat(F.col("y"), z)
+    w = F.expr(sq.tile_lon_sql("x", z))
+    e = F.expr(sq.tile_lon_sql("(x + 1)", z))
+    s = F.expr(sq.tile_lat_sql("(y + 1)", z))
+    n = F.expr(sq.tile_lat_sql("y", z))
     ring = F.array(
         F.array(w, s), F.array(w, n), F.array(e, n), F.array(e, s), F.array(w, s)
     )

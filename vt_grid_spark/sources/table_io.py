@@ -39,9 +39,9 @@ def zorder_clustered(df: DataFrame, n_parts: int) -> DataFrame:
     plan gate in tests/test_physical_plans.py asserts the exact
     production plan: one RangePartitioning exchange on the morton
     column, pinned partition count."""
-    from vt_grid_spark import functions as vf
+    from vt_grid_spark.functions import sqltext as sq
 
-    return (df.withColumn("_mz", vf.morton(F.col("x"), F.col("y")))
+    return (df.withColumn("_mz", F.expr(sq.morton_sql("x", "y")))
             .repartitionByRange(n_parts, "_mz")
             .sortWithinPartitions("_mz")
             .drop("_mz"))
