@@ -219,18 +219,67 @@ def test_merge_cells_three_way_with_partials(spark):
     assert a == b and len(a) > 50
 
 
+def test_combine_cells_matches_spark_rollup_and_merge(spark):
+    """The driver combiner (DRIVER_COMBINERS) against the Spark one
+    (compile_rollup_aggs) for every reducer: shift 1 == rollup_level and
+    shift 0 == merge_cells, including partials that are null or NaN in
+    some cells (Spark's sum/min/max skip nulls, all-null stays null; NaN
+    sorts above every number, so min skips it and max returns it)."""
+    import pyarrow as pa
+
+    from vt_grid_spark.operators.encode import cell_aggregate, encode_points
+    from vt_grid_spark.operators.pyramid import combine_cells
+    from vt_grid_spark.operators.rollup import merge_cells, rollup_level
+    from vt_grid_spark.plans.aggspec import compile_aggs
+
+    specs = SPECS + [
+        AggSpec(out="sk", reducer="kmvDistinct", field="lang", k=4),
+        AggSpec(out="h", reducer="histQuantile", field="v", buckets=4, width=8.0),
+        AggSpec(out="awm", reducer="areaWeightedMean", field="v"),
+        AggSpec(out="aws", reducer="areaWeightedSum", field="v"),
+        AggSpec(out="area", reducer="totalArea"),
+        AggSpec(out="sum_n", reducer="sum", field="n"),
+        AggSpec(out="min_n", reducer="min", field="n"),
+        AggSpec(out="max_n", reducer="max", field="n"),
+    ]
+    pick = F.pmod(F.xxhash64("url"), F.lit(7))  # 0: NaN, 1-3: null, else v
+    pts = _points(spark, 3000).withColumn(
+        "n", F.when(pick == 0, F.lit(float("nan"))).when(pick > 3, F.col("v")))
+    enc = encode_points(pts, 7, with_quadkey=False) \
+        .withColumn("_s", F.pmod(F.xxhash64("url"), F.lit(2)))
+    parts = [cell_aggregate(enc.where(F.col("_s") == i), 7, compile_aggs(specs))
+             for i in range(2)]
+    fine = cell_aggregate(enc, 7, compile_aggs(specs))
+
+    def rows(tbl):
+        d = tbl.select(sorted(c for c in tbl.column_names
+                              if c not in ("zoom", "quadkey"))).to_pydict()
+        return sorted((tuple("NaN" if v != v else v for v in r)
+                       for r in zip(*d.values())), key=str)
+
+    spark_roll = rollup_level(fine, 7, specs).drop("zoom", "quadkey").toArrow()
+    assert rows(combine_cells(fine.toArrow(), specs, shift=1)) == rows(spark_roll)
+    spark_merge = merge_cells(parts, 7, specs).drop("zoom", "quadkey").toArrow()
+    both = pa.concat_tables([p.drop("zoom").toArrow() for p in parts])
+    assert rows(combine_cells(both, specs, shift=0)) == rows(spark_merge)
+    # the all-null and the NaN cases are both exercised
+    assert 0 < spark_roll.column("sum_n").null_count < spark_roll.num_rows
+    mins, maxs = (spark_roll.column(c).to_pylist() for c in ("min_n", "max_n"))
+    assert any(a == a and b != b for a, b in zip(mins, maxs))
+
+
 def test_hist_quantile_merge_exact_and_bounds(spark):
     """histQuantile property tests: (1) bucket arrays merged up two
     pyramid levels are IDENTICAL to histograms built directly at the
     coarse level (exact mergeability); (2) the pNN lower bound brackets
-    the true percentile within one bucket width; (3) the small-level
-    pandas rollup path agrees with the Spark rollup; (4) non-power-of-2
-    width is rejected."""
+    the true percentile within one bucket width; (3) the driver-side
+    combiner agrees with the Spark rollup; (4) non-power-of-2 width is
+    rejected."""
     import numpy as np
     import pytest
 
     from vt_grid_spark.operators.encode import cell_aggregate, encode_points
-    from vt_grid_spark.operators.pyramid import _rollup_small_pandas
+    from vt_grid_spark.operators.pyramid import combine_cells
     from vt_grid_spark.operators.rollup import rollup_level
     from vt_grid_spark.plans.aggspec import AggSpec, compile_aggs, finalize_columns
 
@@ -266,15 +315,13 @@ def test_hist_quantile_merge_exact_and_bounds(spark):
                                              and lo == (b - 1) * w), \
                 (key, q, lo, true_q)
 
-    # pandas small-level rollup agrees with the Spark rollup
-    import pandas as pd
-    fine_pdf = fine.toPandas()
-    fine_pdf["h"] = fine_pdf["h"].map(list)
-    small = _rollup_small_pandas(fine_pdf, 8, [spec])
+    # the driver-side combiner agrees with the Spark rollup
+    small = combine_cells(fine.toArrow(), [spec], shift=1).to_pydict()
     spark_roll = {(r.x, r.y): tuple(r.h)
                   for r in rollup_level(fine, 8, [spec]).collect()}
-    pandas_roll = {(r.x, r.y): tuple(r.h) for _, r in small.iterrows()}
-    assert pandas_roll == spark_roll
+    driver_roll = {(x, y): tuple(h)
+                   for x, y, h in zip(small["x"], small["y"], small["h"])}
+    assert driver_roll == spark_roll
 
     with pytest.raises(ValueError, match="power of 2"):
         AggSpec(out="h", reducer="histQuantile", field="_v", width=48.0)
@@ -321,23 +368,33 @@ def test_kmv_sketch_merge_exact_and_estimate_sane(spark):
     assert saturated >= 1  # the hot cluster must exercise the estimator
 
 
-def test_incremental_update_equals_rebuild(spark, tmp_path):
-    """Delta ingest: build over batch A, incremental_update with batch B —
-    every level must EQUAL a clean build over A ∪ B (the mergeable-reducer
-    monoid property end-to-end, including the kmvDistinct sketch and the
-    driver-side small-level path)."""
+def _fold_equals_rebuild(spark, tmp_path, b_mod=4, before_fold=None):
+    """Build over batch A, incremental_update with batch B — every level
+    must EQUAL a clean build over A ∪ B (the mergeable-reducer monoid
+    property end-to-end: union, kmvDistinct, histQuantile and the mean
+    partials included), and the hot-key bookkeeping (max_cell_rows) must
+    match the clean build's.  B is every ``b_mod``-th point, or all but
+    every ``-b_mod``-th one when negative; ``before_fold(io, b, plan)``
+    runs between the build and the fold.  Returns the fold's TableIO and
+    its cell zooms."""
     from vt_grid_spark.operators.pyramid import incremental_update
 
-    specs = SPECS + [AggSpec(out="sk", reducer="kmvDistinct", field="lang", k=8)]
+    specs = SPECS + [AggSpec(out="sk", reducer="kmvDistinct", field="lang", k=8),
+                     AggSpec(out="h", reducer="histQuantile", field="v",
+                             buckets=8, width=4.0)]
     plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=5, aggregations=specs)],
                        gridsize=16)
     pts = _points(spark, 3000).cache()
-    a = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) != 0)
-    b = pts.where(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+    in_b = F.pmod(F.xxhash64("url"), F.lit(abs(b_mod))) == 0
+    if b_mod < 0:
+        in_b = ~in_b
+    a, b = pts.where(~in_b), pts.where(in_b)
     assert 0 < b.count() < pts.count()
 
     io_inc = TableIO(str(tmp_path / "inc"))
     build_pyramid(a, plan, io_inc, resume=False)
+    if before_fold is not None:
+        before_fold(io_inc, b, plan)
     man = incremental_update(b, plan, io_inc)
     io_full = TableIO(str(tmp_path / "full"))
     man_full = build_pyramid(pts, plan, io_full, resume=False)
@@ -349,14 +406,125 @@ def test_incremental_update_equals_rebuild(spark, tmp_path):
 
         def norm(df):
             df = df.withColumn("mean_v", fin["mean_v"])
-            return {(r.x, r.y): (r.cnt, round(r.sum_v, 6), round(r.mean_v, 6),
-                                 r.min_v, r.max_v, tuple(r.langs), tuple(r.sk))
+            return {(r.x, r.y): (r.quadkey, r.cnt, round(r.sum_v, 6), round(r.mean_v, 6),
+                                 r.min_v, r.max_v, tuple(r.langs), tuple(r.sk),
+                                 tuple(r.h))
                     for r in df.collect()}
 
         got, want = norm(io_inc.read_level(spark, z)), norm(io_full.read_level(spark, z))
         assert got == want and len(got) > 0, f"zoom {z} diverged"
         assert man[z]["row_count"] == man_full[z]["row_count"]
+        assert man[z]["max_cell_rows"] == man_full[z]["max_cell_rows"] > 0
     pts.unpersist()
+    return io_inc, sorted(man)
+
+
+def _spark_written(io, zoom) -> bool:
+    """Spark's parquet writer leaves a _SUCCESS marker; the driver's does not."""
+    return os.path.exists(os.path.join(io.level_path(zoom), "_SUCCESS"))
+
+
+def test_incremental_update_equals_rebuild(spark, tmp_path):
+    """Every level is small: the delta is collected once and every level
+    folds on the driver (combine_cells)."""
+    io, zooms = _fold_equals_rebuild(spark, tmp_path)
+    assert not any(_spark_written(io, z) for z in zooms)
+
+
+def test_incremental_update_equals_rebuild_spark_merge(spark, tmp_path, monkeypatch):
+    """SMALL_LEVEL_ROWS = 0: the build and the fold take the Spark path at
+    every level (broadcast anti/semi join + merge_cells + staged write)."""
+    from vt_grid_spark.operators import pyramid as pyr
+
+    monkeypatch.setattr(pyr, "SMALL_LEVEL_ROWS", 0)
+    io, zooms = _fold_equals_rebuild(spark, tmp_path)
+    assert all(_spark_written(io, z) for z in zooms)
+
+
+def test_incremental_update_large_delta_falls_back_to_spark(spark, tmp_path, monkeypatch):
+    """Levels below SMALL_LEVEL_ROWS but a delta whose base partials reach
+    it: the delta is not collected, and every level merges on Spark."""
+    from vt_grid_spark.operators import pyramid as pyr
+    from vt_grid_spark.operators.encode import encode_points
+
+    def threshold_between(io, b, plan):
+        # A is 1/8 of the points, the delta the other 7/8: put the cut
+        # just above A's biggest level, below the delta's base cell count
+        zooms = [z for _, z, _ in plan.levels()]
+        cut = max(io.read_manifest(z)["row_count"] for z in zooms) + 1
+        delta_cells = encode_points(b, zooms[0]).select("x", "y").distinct().count()
+        assert delta_cells >= cut
+        monkeypatch.setattr(pyr, "SMALL_LEVEL_ROWS", cut)
+
+    io, zooms = _fold_equals_rebuild(spark, tmp_path, b_mod=-8,
+                                     before_fold=threshold_between)
+    assert all(_spark_written(io, z) for z in zooms)
+
+
+def test_driver_fold_failed_write_keeps_old_level(spark, tmp_path, monkeypatch):
+    """A driver-side level write that fails part-way leaves the old level
+    readable and its manifest unchanged (the file is written into
+    ``<level>.inprogress`` and only then swapped in)."""
+    import json
+
+    import pyarrow.parquet as pq
+    import pytest
+
+    from vt_grid_spark.operators.pyramid import incremental_update
+
+    plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=6, aggregations=SPECS[:2])],
+                       gridsize=16)
+    io = TableIO(str(tmp_path / "pyr"))
+    build_pyramid(_points(spark, 1500), plan, io, resume=False)
+    zooms = [z for _, z, _ in plan.levels()]
+
+    def snapshot():
+        return {z: (json.dumps(io.read_manifest(z), sort_keys=True),
+                    io.read_level_arrow(z).sort_by([("x", "ascending"),
+                                                   ("y", "ascending")]))
+                for z in zooms}
+
+    before = snapshot()
+
+    def broken_write(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", broken_write)
+    with pytest.raises(OSError, match="disk full"):
+        incremental_update(_points(spark, 300), plan, io)
+    after = snapshot()
+    for z in zooms:
+        assert after[z][0] == before[z][0], f"zoom {z} manifest changed"
+        assert after[z][1].equals(before[z][1]), f"zoom {z} level changed"
+
+
+def test_incremental_update_jobs_do_not_grow_with_levels(spark, tmp_path):
+    """Small levels fold without a Spark job each: folding the same delta
+    into a 2-level and a 5-level pyramid launches the same number of jobs
+    (the delta's aggregation and its one collect)."""
+    from vt_grid_spark.operators.pyramid import incremental_update
+
+    sc = spark.sparkContext
+    pts = _points(spark, 1500)
+    delta = _points(spark, 200)
+
+    def fold_jobs(minzoom, name):
+        plan = PyramidPlan(bands=[ZoomBand(basezoom=8, minzoom=minzoom,
+                                           aggregations=SPECS)], gridsize=16)
+        io = TableIO(str(tmp_path / name))
+        build_pyramid(pts, plan, io, resume=False)
+        assert len(list(plan.levels())) == 8 - minzoom
+        sc.setJobGroup(name, "incremental_update job count")
+        try:
+            incremental_update(delta, plan, io)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    two, five = fold_jobs(6, "fold2"), fold_jobs(3, "fold5")
+    assert two > 0  # the delta aggregation runs on Spark, inside the group
+    assert two == five
 
 
 def test_incremental_update_requires_complete_pyramid(spark, tmp_path):

@@ -33,20 +33,21 @@ def _has_holistic(specs: list[AggSpec]) -> bool:
     return any(s.reducer in HOLISTIC for s in specs)
 
 
+def partial_columns(spec: AggSpec) -> list[str]:
+    """The columns one spec keeps in a level: ``out``, or its partials."""
+    if spec.reducer == "mean":
+        return [f"{spec.out}__cnt", f"{spec.out}__sum"]
+    if spec.reducer == "areaWeightedMean":
+        return [f"{spec.out}__w", f"{spec.out}__wv"]
+    return [spec.out]
+
+
 def _required_rollup_cols(specs: list[AggSpec]) -> list[str]:
     """Input columns a rollup consumes.  Rollup input is by contract the
     OUTPUT of compile_aggs/compile_rollup_aggs: the aggregate lives under
     ``spec.out`` (partials under ``out__*``) — ``spec.field`` names the
     base-level input column and is never read again above the base level."""
-    cols: list[str] = []
-    for s in specs:
-        if s.reducer == "mean":
-            cols += [f"{s.out}__cnt", f"{s.out}__sum"]
-        elif s.reducer == "areaWeightedMean":
-            cols += [f"{s.out}__w", f"{s.out}__wv"]
-        else:
-            cols.append(s.out)
-    return cols
+    return [c for s in specs for c in partial_columns(s)]
 
 
 def rollup_level(cells: DataFrame, child_z: int, specs: list[AggSpec],

@@ -99,24 +99,46 @@ def tile_to_polygon(x: int, y: int, z: int) -> list:
 # quadkeys
 # ---------------------------------------------------------------------------
 
+def morton(x, y):
+    """Z-order code: x bits on even positions, y bits on odd — the numpy
+    twin of ``sqltext.morton_sql``; exact for x, y < 2^31."""
+    def spread(v):  # bit i -> bit 2i ("Bit Twiddling Hacks")
+        v = np.asarray(v, dtype=np.int64).astype(np.uint64)
+        for shift, mask in ((16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
+                            (4, 0x0F0F0F0F0F0F0F0F), (2, 0x3333333333333333),
+                            (1, 0x5555555555555555)):
+            v = (v | (v << np.uint64(shift))) & np.uint64(mask)
+        return v
+    return spread(x) | (spread(y) << np.uint64(1))
+
+
+def quadkey_chars(x, y, z: int):
+    """Quadkeys as an (..., z) uint8 array of ASCII digits.  Digit k
+    (k=1..z) = bit (z-k) of x + 2*bit of y, i.e. the base-4 digits of the
+    Morton code, most significant first — so a parent's key is the
+    child's minus its last digit, held in integers."""
+    m = morton(x, y)
+    out = np.empty(m.shape + (z,), dtype=np.uint8)
+    for k in range(z):
+        out[..., k] = (m >> np.uint64(2 * (z - 1 - k))) & np.uint64(3)
+    out += ord("0")
+    return out
+
+
 def tile_to_quadkey(x, y, z: int):
-    """Vectorized quadkey: digit k (k=1..z) = bit (z-k) of x + 2*bit of y.
+    """Vectorized quadkey strings (a ``str`` for scalar input).
 
     Parity with tilebelt.tileToQuadkey
     (/root/reference/lib/aggregate-cells.js:32,44,102).
     """
     x = np.asarray(x, dtype=np.int64)
-    y = np.asarray(y, dtype=np.int64)
     if z == 0:
         return np.full(x.shape if x.shape else (), "", dtype=object)
-    digits = np.empty(x.shape + (z,), dtype=np.uint8) if x.shape else np.empty((z,), dtype=np.uint8)
-    for k in range(z):
-        shift = z - 1 - k
-        d = ((x >> shift) & 1) + 2 * ((y >> shift) & 1)
-        digits[..., k] = d.astype(np.uint8) + ord("0")
-    if x.shape:
-        return np.array([bytes(row).decode("ascii") for row in digits.reshape(-1, z)], dtype=object).reshape(x.shape)
-    return bytes(digits).decode("ascii")
+    chars = quadkey_chars(x, y, z)
+    if not x.shape:
+        return chars.tobytes().decode("ascii")
+    keys = chars.reshape(-1, z).view(f"S{z}").ravel().astype(f"U{z}")
+    return keys.astype(object).reshape(x.shape)
 
 
 def quadkey_to_tile(qk: str):
