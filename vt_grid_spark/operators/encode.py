@@ -24,11 +24,13 @@ def encode_points(df: DataFrame, z: int, lon: str = "lon", lat: str = "lat",
     the strict-interior degenerate filter a no-op for points — a point on a
     shared edge belongs to exactly one cell (SURVEY.md §2.2 P1).
     """
-    out = (
-        df.withColumn("zoom", F.lit(z))
-        .withColumn("x", F.expr(sq.tile_x_sql(sq.quote_ident(lon), z)))
-        .withColumn("y", F.expr(sq.tile_y_sql(sq.quote_ident(lat), z)))
-    )
+    # one withColumns: each DataFrame call is a py4j round trip plus an
+    # eager analysis of the whole plan on the driver
+    out = df.withColumns({
+        "zoom": F.lit(z),
+        "x": F.expr(sq.tile_x_sql(sq.quote_ident(lon), z)),
+        "y": F.expr(sq.tile_y_sql(sq.quote_ident(lat), z)),
+    })
     if with_quadkey:
         out = out.withColumn("quadkey", F.expr(sq.quadkey_sql("x", "y", z)))
     return out
@@ -96,10 +98,9 @@ def cell_aggregate(points: DataFrame, z: int, agg_exprs: list,
     base-level shuffle bytes at z12)."""
     keys = ["x", "y"] + (extra_keys or [])
     out = points.groupBy(*keys).agg(*agg_exprs)
-    out = out.withColumn("zoom", F.lit(z))
-    cols = ["zoom", "x", "y"]
+    # the aggregate's output is the keys, then the aggregates; zoom and
+    # quadkey ride in the one final projection
+    cols = [F.lit(z).alias("zoom"), "x", "y"]
     if "quadkey" in points.columns:
-        out = out.withColumn("quadkey", F.expr(sq.quadkey_sql("x", "y", z)))
-        cols.append("quadkey")
-    agg_cols = [c for c in out.columns if c not in set(cols) | set(extra_keys or [])]
-    return out.select(*cols, *(extra_keys or []), *agg_cols)
+        cols.append(F.expr(sq.quadkey_sql("x", "y", z)).alias("quadkey"))
+    return out.select(*cols, *out.columns[2:])

@@ -166,7 +166,8 @@ def _with_quadkey(cells: pa.Table, z: int) -> pa.Table:
     return cells.add_column(2, "quadkey", qk)
 
 
-def _apply_cover(points: DataFrame, plan: PyramidPlan, cell_z: int) -> DataFrame:
+def _apply_cover(points: DataFrame, plan: PyramidPlan, cell_z: int,
+                 with_quadkey: bool = True) -> DataFrame:
     """Encode at cell_z, restricted to the plan's bbox / tile-list cover
     (reference index.js:113-122).  Two-stage filter: a conservative lon/lat
     range predicate on the RAW columns first (reaches the parquet scan as
@@ -174,9 +175,10 @@ def _apply_cover(points: DataFrame, plan: PyramidPlan, cell_z: int) -> DataFrame
     cell-range predicate on the encoded key."""
     ranges = cover_ranges(cell_z, plan.bbox, plan.tiles)
     if not ranges:
-        return encode_points(points, cell_z)
+        return encode_points(points, cell_z, with_quadkey=with_quadkey)
     pre = points.where(cover_lonlat_predicate(ranges, cell_z))
-    return encode_points(pre, cell_z).where(cover_cell_predicate(ranges))
+    return (encode_points(pre, cell_z, with_quadkey=with_quadkey)
+            .where(cover_cell_predicate(ranges)))
 
 
 def build_pyramid(points: DataFrame, plan: PyramidPlan, io: TableIO,
@@ -348,8 +350,11 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
     # materialized, so every level's broadcast re-ran the whole delta
     # aggregation from raw points.  The chain is materialized by the merge
     # jobs below and released once every level is committed.  At the
-    # first driver level the chain is collected instead, and stops.
-    cur = cell_aggregate(_apply_cover(delta_points, plan, base_cell_z),
+    # first driver level the chain is collected instead, and stops.  No
+    # quadkey in the chain: every consumer (merge_cells, rollup_level, the
+    # driver fold) re-derives it from (x, y).
+    cur = cell_aggregate(_apply_cover(delta_points, plan, base_cell_z,
+                                      with_quadkey=False),
                          base_cell_z, compile_aggs(base_band.aggregations))
     work: list[tuple] = []
     small = None
@@ -357,8 +362,8 @@ def incremental_update(delta_points: DataFrame, plan: PyramidPlan,
         if i:
             cur = rollup_level(cur, levels[i - 1][1], band.aggregations)
         if i == n_spark:
-            small = (cur.select(*_level_columns(band.aggregations))
-                     .limit(SMALL_LEVEL_ROWS).toArrow())
+            # collected whole: phase 3 picks the level's columns in Arrow
+            small = cur.limit(SMALL_LEVEL_ROWS).toArrow()
             if small.num_rows < SMALL_LEVEL_ROWS:
                 break
             small, n_spark = None, len(levels)  # too big a delta for the driver
